@@ -304,6 +304,27 @@ def kring_cells(
 # ---------------------------------------------------------------------------
 
 
+#: Points per block of the points x edges broadcast in the ring kernels, so
+#: a block's temporaries hold at most RING_BLOCK x E elements however many
+#: points a caller passes.
+RING_BLOCK = 4096
+
+
+def _closed_ring(ring) -> tuple[np.ndarray, np.ndarray]:
+    """(xs, ys) of a flat-packed ring, closed if it is not already."""
+    r = np.asarray(ring, dtype=np.float64)
+    xs, ys = r[0::2], r[1::2]
+    if xs.shape[0] and (xs[0] != xs[-1] or ys[0] != ys[-1]):
+        xs = np.concatenate([xs, xs[:1]])
+        ys = np.concatenate([ys, ys[:1]])
+    return xs, ys
+
+
+def _blocks(idx: np.ndarray):
+    for s in range(0, idx.shape[0], RING_BLOCK):
+        yield idx[s : s + RING_BLOCK]
+
+
 def point_in_rings(
     px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]
 ) -> np.ndarray:
@@ -316,7 +337,17 @@ def point_in_rings(
     Crossing rule: an edge (x1,y1)→(x2,y2) crosses the rightward ray from
     (px,py) iff ``(y1 > py) != (y2 > py)`` and
     ``px < (x2-x1)·(py-y1)/(y2-y1) + x1``. This is the standard even-odd
-    rule; holes naturally flip parity. Fully vectorized (N × E broadcast).
+    rule; holes naturally flip parity.
+
+    Each ring first drops the points it cannot flip, using its bounding
+    box: no edge straddles a ``py`` outside [min y, max y]; a point right
+    of every intersection crosses nothing, and one left of every
+    intersection crosses all straddling edges — an even number on a
+    closed ring. A computed intersection can leave [min x, max x] by a
+    few ulps of rounding, so the x bounds are padded by 16 ulps of their
+    magnitude and the result stays bit-identical to the unpruned
+    broadcast. The survivors run the N × E broadcast in blocks of
+    :data:`RING_BLOCK` points.
 
     The identical arithmetic is used in the SQL oracles (see
     ``__spark_entry__.py``) so Spark and DuckDB agree bit-for-bit.
@@ -325,26 +356,27 @@ def point_in_rings(
     py = np.asarray(py, dtype=np.float64)
     inside = np.zeros(px.shape[0], dtype=bool)
     for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        xs, ys = r[0::2], r[1::2]
-        # close the ring if not closed
+        xs, ys = _closed_ring(ring)
         if xs.shape[0] == 0:
             continue
-        if xs[0] != xs[-1] or ys[0] != ys[-1]:
-            xs = np.concatenate([xs, xs[:1]])
-            ys = np.concatenate([ys, ys[:1]])
-        x1, y1 = xs[:-1], ys[:-1]
-        x2, y2 = xs[1:], ys[1:]
-        # broadcast: points (N,1) vs edges (1,E)
-        pyc = py[:, None]
-        pxc = px[:, None]
-        straddle = (y1[None, :] > pyc) != (y2[None, :] > pyc)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (x2 - x1)[None, :] * (pyc - y1[None, :]) / (y2 - y1)[
-                None, :
-            ] + x1[None, :]
-        crossings = (straddle & (pxc < xint)).sum(axis=1)
-        inside ^= (crossings % 2).astype(bool)
+        x1, y1, x2, y2 = xs[:-1], ys[:-1], xs[1:], ys[1:]
+        dx, dy = x2 - x1, y2 - y1
+        xlo, xhi, ylo, yhi = xs.min(), xs.max(), ys.min(), ys.max()
+        if np.isfinite([xlo, xhi, ylo, yhi]).all():
+            pad = 16 * np.spacing(max(abs(xlo), abs(xhi), xhi - xlo))
+            idx = np.flatnonzero(
+                (py >= ylo) & (py <= yhi) & (px >= xlo - pad) & (px <= xhi + pad)
+            )
+        else:
+            idx = np.arange(px.shape[0])
+        for b in _blocks(idx):
+            # broadcast: points (B,1) vs edges (E,)
+            pyc, pxc = py[b, None], px[b, None]
+            straddle = (y1 > pyc) != (y2 > pyc)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xint = dx * (pyc - y1) / dy + x1
+            crossings = (straddle & (pxc < xint)).sum(axis=1)
+            inside[b] ^= (crossings % 2).astype(bool)
     return inside
 
 
@@ -376,28 +408,37 @@ def rects_touch_rings(
     A segment overlaps an axis-aligned rect iff the x-extents overlap, the
     y-extents overlap, and the rect straddles the segment's support line
     (``|n·(c-p1)| ≤ hx·|nx| + hy·|ny|`` for the edge normal n) — the
-    separating-axis test. Broadcast cells × edges; callers bbox-prefilter
-    cells so the product stays small.
+    separating-axis test. Each ring first drops the cells whose rect
+    misses its bounding box, with the same extent comparisons the SAT
+    makes per edge (a rect that misses the box misses every edge), then
+    broadcasts the survivors × edges in blocks of :data:`RING_BLOCK` cells.
     """
-    cx = np.asarray(cx, dtype=np.float64)[:, None]
-    cy = np.asarray(cy, dtype=np.float64)[:, None]
+    cx = np.asarray(cx, dtype=np.float64)
+    cy = np.asarray(cy, dtype=np.float64)
+    left, right, bottom, top = cx - hx, cx + hx, cy - hy, cy + hy
     out = np.zeros(cx.shape[0], dtype=bool)
     for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        xs, ys = r[0::2], r[1::2]
+        xs, ys = _closed_ring(ring)
         if xs.shape[0] < 2:
             continue
-        if xs[0] != xs[-1] or ys[0] != ys[-1]:
-            xs = np.concatenate([xs, xs[:1]])
-            ys = np.concatenate([ys, ys[:1]])
-        x1, y1, x2, y2 = xs[:-1][None], ys[:-1][None], xs[1:][None], ys[1:][None]
-        ox = (np.minimum(x1, x2) <= cx + hx) & (np.maximum(x1, x2) >= cx - hx)
-        oy = (np.minimum(y1, y2) <= cy + hy) & (np.maximum(y1, y2) >= cy - hy)
+        x1, y1, x2, y2 = xs[:-1], ys[:-1], xs[1:], ys[1:]
+        exlo, exhi = np.minimum(x1, x2), np.maximum(x1, x2)
+        eylo, eyhi = np.minimum(y1, y2), np.maximum(y1, y2)
         nx, ny = -(y2 - y1), x2 - x1
-        straddle = np.abs(nx * (cx - x1) + ny * (cy - y1)) <= (
-            hx * np.abs(nx) + hy * np.abs(ny)
-        )
-        out |= (ox & oy & straddle).any(axis=1)
+        reach = hx * np.abs(nx) + hy * np.abs(ny)
+        xlo, xhi, ylo, yhi = xs.min(), xs.max(), ys.min(), ys.max()
+        if np.isfinite([xlo, xhi, ylo, yhi]).all():
+            idx = np.flatnonzero(
+                (xlo <= right) & (xhi >= left) & (ylo <= top) & (yhi >= bottom)
+            )
+        else:
+            idx = np.arange(cx.shape[0])
+        for b in _blocks(idx):
+            bx, by = cx[b, None], cy[b, None]
+            ox = (exlo <= right[b, None]) & (exhi >= left[b, None])
+            oy = (eylo <= top[b, None]) & (eyhi >= bottom[b, None])
+            straddle = np.abs(nx * (bx - x1) + ny * (by - y1)) <= reach
+            out[b] |= (ox & oy & straddle).any(axis=1)
     return out
 
 
@@ -515,13 +556,7 @@ def polygon_sample_centers(
     if all_touched:
         hit = point_in_rings(cx, cy, rings).reshape(nrows, ncols)
         for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            xs, ys = r[0::2], r[1::2]
-            if xs.shape[0] == 0:
-                continue
-            if xs[0] != xs[-1] or ys[0] != ys[-1]:
-                xs = np.concatenate([xs, xs[:1]])
-                ys = np.concatenate([ys, ys[:1]])
+            xs, ys = _closed_ring(ring)
             # to local continuous cell coords: col along +x, row along -y
             lc = (xs - ox) / resx
             lr = (oy - ys) / resy

@@ -14,11 +14,15 @@ scan(pruned tiles) → broadcast-hash-join → partial agg.
 
 Polygon extract replicates ``sample_feature``
 (``src/geowombat/core/util.py:472-573``): polygon-local grid, rasterize-by-
-center parity via ray-cast PIP, row-major sample order — run per polygon in
-``applyInPandas`` so each polygon's sampling is one vectorized numpy kernel.
+center parity via ray-cast PIP, row-major sample order. The polygons are
+the small, driver-resident side, so their samples are built and encoded in
+the driver (one vectorized numpy kernel per feature) and broadcast into the
+join: the plan holds no Python stage at all.
 """
 
 from __future__ import annotations
+
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -33,6 +37,12 @@ from ..grid import (
 )
 
 BAND_COLS = ("band_blue", "band_green", "band_red")
+
+#: Most polygon samples whose extract_polygons rows are sorted in a single
+#: partition; larger extracts, and extracts from a corpus with a 't'
+#: column (rows = samples x time steps, which the driver does not know),
+#: sort with ``orderBy``. See ROADMAP.md for the timing behind the value.
+SORT_ONE_PARTITION_MAX_SAMPLES = 1 << 15
 
 
 def _band_col(name: str) -> str:
@@ -287,6 +297,101 @@ def extract_points(
     return out.drop("_pt_order")
 
 
+def _id_sql_type(ids: pd.Series) -> str:
+    """Spark type of the sample id column, with the reference's int-FIRST
+    fallback (util.py:553-559: try int(fid), fall back to str on
+    ValueError) — so a float64 fid column (pandas merge/NaN promotion of
+    ints) stays numeric (int(1.0) == 1, not the string '1.0'), while a
+    genuinely non-numeric GeoDataFrame-style fid survives as string rather
+    than int()-crashing. Column-level dispatch: the int path only when
+    EVERY value round-trips through int() LOSSLESSLY and fits int64 — a
+    non-integral float (7.2) must not truncate onto another feature's
+    id/seed, and an integral float beyond int64 (1e19) must not overflow
+    the int64 column. An empty column has no values to probe, so its dtype
+    decides: object/string gives string, anything else bigint."""
+    if len(ids) == 0:
+        textual = ids.dtype == object or pd.api.types.is_string_dtype(ids.dtype)
+        return "string" if textual else "bigint"
+    try:
+        for v in ids:
+            iv = int(v)
+            if float(v) != float(iv) or not (-(2**63) <= iv < 2**63):
+                return "string"
+    except (ValueError, TypeError, OverflowError):
+        return "string"
+    return "bigint"
+
+
+def _polygon_samples(
+    polygons: pd.DataFrame,
+    grid: GridSpec,
+    frac: float = 1.0,
+    min_frac_area: float | None = None,
+    all_touched: bool = False,
+    seed: int = 42,
+    id_column: str = "fid",
+    grid_aligned: bool = False,
+) -> tuple[pd.DataFrame, str]:
+    """Driver-side body of :func:`sample_polygons`: the samples as a pandas
+    frame (``id_column, point, x, y``) plus the Spark type of the id
+    column."""
+    res_x, res_y = grid.cellx, grid.celly
+    anchor = (grid.left, grid.top) if grid_aligned else None
+    id_type = _id_sql_type(polygons[id_column])
+    id_dtype = object if id_type == "string" else np.int64
+    # each list starts with an empty part so an empty input concatenates
+    fids, points = [np.empty(0, dtype=id_dtype)], [np.empty(0, dtype=np.int64)]
+    xs, ys = [np.empty(0)], [np.empty(0)]
+    # dropna=False: missing fids form one feature group of their own, with
+    # the id 'nan' in a float column (the str of a NaN) and 'None' in any
+    # other (the str of a null)
+    null_id = "nan" if polygons[id_column].dtype.kind == "f" else "None"
+    for key, g in polygons.groupby(id_column, dropna=False, sort=False):
+        # deterministic per-feature rng offset: identity for int fids
+        # (preserves historical sampled outputs), crc32 for strings
+        if id_type == "string":
+            fid = null_id if pd.isna(key) else str(key)
+            fid_seed = zlib.crc32(fid.encode("utf-8"))
+        else:
+            fid = int(key)
+            fid_seed = fid
+        # EVERY row of the group is a polygon: duplicate fids (a multipart
+        # feature exploded without renumbering) are real inputs, and
+        # sampling only the group's first row would silently drop the rest
+        # — the reference's per-feature pool samples each row
+        # (conversion.py:438-493). Point ids continue across parts so they
+        # stay unique within the fid.
+        n_fid = 0
+        for ri, rs in enumerate(g["rings"]):
+            rings = [np.asarray(r, dtype=np.float64) for r in rs]
+            cx, cy = polygon_sample_centers(
+                rings, res_x, res_y, all_touched=all_touched, anchor=anchor
+            )
+            if frac < 1.0 and not (
+                min_frac_area is not None and cx.shape[0] <= min_frac_area
+            ):
+                rng = np.random.default_rng(seed + fid_seed + 7919 * ri)
+                idx = rng.choice(
+                    cx.shape[0], size=int(cx.shape[0] * frac), replace=False
+                )
+                idx.sort()
+                cx, cy = cx[idx], cy[idx]
+            xs.append(cx)
+            ys.append(cy)
+            n_fid += cx.shape[0]
+        fids.append(np.full(n_fid, fid, dtype=id_dtype))
+        points.append(np.arange(n_fid, dtype=np.int64))
+    out = pd.DataFrame(
+        {
+            id_column: np.concatenate(fids),
+            "point": np.concatenate(points),
+            "x": np.concatenate(xs),
+            "y": np.concatenate(ys),
+        }
+    )
+    return out, id_type
+
+
 def sample_polygons(
     spark: SparkSession,
     polygons: pd.DataFrame,
@@ -306,104 +411,22 @@ def sample_polygons(
     bbox-local lattice is the reference's extract sampling.
 
     ``polygons`` columns: ``fid`` plus ``rings`` (list of flat
-    ``[x0,y0,x1,y1,...]`` arrays) and any attribute columns. Runs one
-    vectorized kernel per polygon via ``applyInPandas`` (the Spark analogue
-    of the reference's per-feature ``multiprocessing.Pool``,
-    ``conversion.py:438-493``). ``frac``/``min_frac_area`` follow
-    ``util.py:538-551`` (subsample only when above the area floor); the rng
-    is seeded per polygon for determinism.
+    ``[x0,y0,x1,y1,...]`` arrays) and any attribute columns. The samples
+    are built in the driver, one vectorized kernel per feature (a group of
+    rows sharing a fid — the reference's per-feature
+    ``multiprocessing.Pool``, ``conversion.py:438-493``), and returned as a
+    local DataFrame ``(id_column, point, x, y)``. ``frac``/``min_frac_area``
+    follow ``util.py:538-551`` (subsample only when above the area floor);
+    the rng is seeded per feature and part for determinism.
     """
-    res_x, res_y = grid.cellx, grid.celly
-    anchor = (grid.left, grid.top) if grid_aligned else None
-    pdf = polygons.copy()
-    pdf["rings"] = pdf["rings"].apply(lambda rs: [list(map(float, r)) for r in rs])
-    if len(pdf) == 0:
-        # an AOI prefilter can legitimately drop every feature; the
-        # reference returns an empty frame (sops.py:836-844) — Spark
-        # cannot infer a schema from the empty object-typed rings column
-        return spark.createDataFrame(
-            [], f"{id_column} bigint, point bigint, x double, y double"
-        )
-    pdf_spark = spark.createDataFrame(pdf)
-
-    # id type follows the input with the reference's int-FIRST fallback
-    # (util.py:553-559: try int(fid), fall back to str on ValueError) —
-    # so a float64 fid column (pandas merge/NaN promotion of ints) stays
-    # numeric (int(1.0) == 1, not the string '1.0'), while a genuinely
-    # non-numeric GeoDataFrame-style fid survives as string rather than
-    # int()-crashing the job. Column-level dispatch: the int path only
-    # when EVERY value round-trips through int() LOSSLESSLY and fits
-    # int64 — a non-integral float (7.2) must not truncate onto another
-    # feature's id/seed, and an integral float beyond int64 (1e19) must
-    # not pass the probe only to overflow the kernel's int64 column.
-    def _all_int_convertible(col) -> bool:
-        try:
-            for v in col:
-                iv = int(v)
-                if float(v) != float(iv) or not (-(2**63) <= iv < 2**63):
-                    return False
-        except (ValueError, TypeError, OverflowError):
-            return False
-        return True
-
-    id_is_str = not _all_int_convertible(pdf[id_column])
-    id_sql_type = "string" if id_is_str else "bigint"
-    out_schema = f"{id_column} {id_sql_type}, point bigint, x double, y double"
-
-    def _sample(key, g: pd.DataFrame) -> pd.DataFrame:
-        # deterministic per-feature rng offset: identity for int fids
-        # (preserves historical sampled outputs), crc32 for strings
-        if id_is_str:
-            import zlib
-
-            fid = str(key[0])
-            fid_seed = zlib.crc32(fid.encode("utf-8"))
-        else:
-            fid = int(key[0])
-            fid_seed = fid
-        # EVERY row of the group is a polygon: duplicate fids (a multipart
-        # feature exploded without renumbering) are real inputs, and
-        # sampling only g.iloc[0] would silently drop the rest — the
-        # reference's per-feature pool samples each row (conversion.py:
-        # 438-493). Point ids continue across parts so they stay unique
-        # within the fid.
-        xs, ys = [], []
-        for ri in range(len(g)):
-            rings = [
-                np.asarray(r, dtype=np.float64) for r in g.iloc[ri]["rings"]
-            ]
-            cx, cy = polygon_sample_centers(
-                rings, res_x, res_y, all_touched=all_touched, anchor=anchor
-            )
-            if frac < 1.0:
-                take = True
-                if min_frac_area is not None and cx.shape[0] <= min_frac_area:
-                    take = False
-                if take:
-                    rng = np.random.default_rng(seed + fid_seed + 7919 * ri)
-                    idx = rng.choice(
-                        cx.shape[0], size=int(cx.shape[0] * frac), replace=False
-                    )
-                    idx.sort()
-                    cx, cy = cx[idx], cy[idx]
-            xs.append(cx)
-            ys.append(cy)
-        cx = np.concatenate(xs) if xs else np.array([], dtype=np.float64)
-        cy = np.concatenate(ys) if ys else np.array([], dtype=np.float64)
-        return pd.DataFrame(
-            {
-                id_column: (
-                    np.full(cx.shape[0], fid, dtype=object)
-                    if id_is_str
-                    else np.full(cx.shape[0], fid, dtype=np.int64)
-                ),
-                "point": np.arange(cx.shape[0], dtype=np.int64),
-                "x": cx,
-                "y": cy,
-            }
-        )
-
-    return pdf_spark.groupBy(id_column).applyInPandas(_sample, out_schema)
+    samples, id_type = _polygon_samples(
+        polygons, grid, frac=frac, min_frac_area=min_frac_area,
+        all_touched=all_touched, seed=seed, id_column=id_column,
+        grid_aligned=grid_aligned,
+    )
+    return spark.createDataFrame(
+        samples, f"{id_column} {id_type}, point bigint, x double, y double"
+    )
 
 
 def extract_polygons(
@@ -420,9 +443,12 @@ def extract_polygons(
     keep_doc_columns: list[str] = (),
 ) -> DataFrame:
     """Sample band values for every cell whose center falls inside each
-    polygon — ``gw.extract(polygons)`` (``sops.py:689-909`` polygon path)."""
-    samples = sample_polygons(
-        spark,
+    polygon — ``gw.extract(polygons)`` (``sops.py:689-909`` polygon path).
+
+    The samples are built, filtered to the grid and cell-encoded in the
+    driver, then broadcast into an equi-join with the scan of the tiles
+    they fall in: no Python worker runs."""
+    samples, id_type = _polygon_samples(
         polygons,
         grid,
         frac=frac,
@@ -434,19 +460,13 @@ def extract_polygons(
     # DROP sample centers outside the grid (reference ``sops.py:836-844``
     # filters out-of-image indices; clamping would gather edge-cell values
     # for the overhanging part of a polygon that extends past the bounds)
-    samples = samples.filter(in_bounds_col(grid))
-    samples = encode_cells(samples, grid)
-    # tile pruning from the polygons' bboxes (driver-side, bbox arithmetic)
-    from ..grid import bbox_cover_tiles
-
-    tiles: set[int] = set()
-    for rs in polygons["rings"]:
-        xs = np.concatenate([np.asarray(r)[0::2] for r in rs])
-        ys = np.concatenate([np.asarray(r)[1::2] for r in rs])
-        tiles.update(
-            bbox_cover_tiles(grid, xs.min(), ys.min(), xs.max(), ys.max())
-        )
-    pruned = _prune_tiles(docs, tiles)
+    samples = samples[in_bounds_mask(samples["x"].values, samples["y"].values, grid)]
+    enc = encode_points_pdf(samples, grid)
+    pts = spark.createDataFrame(
+        enc[[id_column, "point", "x", "y", "cell_id"]],
+        f"{id_column} {id_type}, point bigint, x double, y double, cell_id bigint",
+    )
+    pruned = _prune_tiles(docs, enc["tile_id"].unique())
     band_cols = [_band_col(b) for b in bands]
     # carry the time column when the corpus is a stack: every sample point
     # legitimately matches one row per time step, and 't' is what makes
@@ -455,11 +475,7 @@ def extract_polygons(
     doc_side = pruned.select(
         "cell_id", *t_cols, *band_cols, *keep_doc_columns
     )
-    joined = doc_side.join(
-        F.broadcast(samples.select(id_column, "point", "x", "y", "cell_id")),
-        "cell_id",
-        "inner",
-    )
+    joined = doc_side.join(F.broadcast(pts), "cell_id", "inner")
     renames = dict(zip(band_cols, bands))
     out = joined.withColumnsRenamed(renames)
     # polygon attribute columns ride back in via the (tiny) broadcast fid
@@ -472,4 +488,10 @@ def extract_polygons(
     )
     if len(attrs.columns) > 1:
         out = out.join(F.broadcast(spark.createDataFrame(attrs)), id_column)
-    return out.orderBy(id_column, "point", *t_cols)
+    keys = [id_column, "point", *t_cols]
+    if t_cols or len(enc) > SORT_ONE_PARTITION_MAX_SAMPLES:
+        return out.orderBy(*keys)
+    # on an unstacked corpus each sample is at most one row, so a small
+    # extract is sorted in one partition: a one-partition range exchange
+    # needs no range-sampling job, which orderBy would run
+    return out.repartitionByRange(1, *keys).sortWithinPartitions(*keys)

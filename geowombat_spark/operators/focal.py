@@ -26,6 +26,8 @@ reference kernel's nodata skip.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -161,7 +163,10 @@ def _window_stat(stat: str, perc: int | None):
     def kernel(win: np.ndarray) -> np.ndarray:
         # win shape (H, W, w, w) — NaN-padded sliding view
         flat = win.reshape(win.shape[0], win.shape[1], -1)
-        with np.errstate(invalid="ignore"):
+        # an all-NaN window is expected (nodata or off-image) and refilled
+        # by the caller; the nan-reductions would warn on every such window
+        with np.errstate(invalid="ignore"), warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
             if stat == "mean":
                 return np.nanmean(flat, axis=2)
             if stat == "sum":

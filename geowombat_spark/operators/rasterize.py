@@ -5,13 +5,13 @@ Reference: ``/root/reference/src/geowombat/core/conversion.py:570-833``
 GDAL ``features.rasterize`` semantics; ``all_touched`` toggles
 center-containment vs cell-intersects).
 
-Spark shape: per-polygon cover cells from the ray-cast PIP kernel
-(``applyInPandas``, one vectorized kernel per polygon) → burn-value map
-(broadcast) → ``max_by(burn, feature_order)`` resolves overlaps exactly like
-GDAL's later-feature-wins → right join onto the window's cell lattice
-(generated with ``spark.range`` — pure codegen) with ``fill`` elsewhere.
-The lattice join is an equi-join on (row, col); at 100 TB the window is
-tile-pruned and the burned side is small → broadcast."""
+Spark shape: the polygons are the small, driver-resident side, so their
+burned cells are resolved once in the driver — per-feature cover cells from
+the ray-cast PIP kernel (one vectorized kernel per feature), burn values,
+and the last feature per cell, exactly GDAL's later-feature-wins — then
+broadcast into a left join from the window's cell lattice (generated with
+``spark.range`` — pure codegen) with ``fill`` elsewhere. The lattice join
+is an equi-join on (row, col) and runs no Python worker."""
 
 from __future__ import annotations
 
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grid import GridSpec, round_window
-from .extract import encode_cells, in_bounds_col, sample_polygons
+from .extract import _polygon_samples, encode_points_pdf, in_bounds_mask
 
 
 def polygon_to_array(
@@ -68,50 +68,40 @@ def polygon_to_array(
             [], "row long, col long, x double, y double, value double"
         )
 
-    # each input ROW is one GDAL feature: key sampling and the burn join
-    # on a per-row id (_pfid), not the user fid — duplicate fids
-    # (multipart explode, or fid collisions carrying different burn
-    # values) must burn each part with ITS OWN row's value, with
-    # later-row-wins only on genuinely overlapping cells
+    # each input ROW is one GDAL feature: key sampling and the burn on a
+    # per-row id (_pfid), not the user fid — duplicate fids (multipart
+    # explode, or fid collisions carrying different burn values) must burn
+    # each part with ITS OWN row's value, with later-row-wins only on
+    # genuinely overlapping cells
     pdf = polygons.reset_index(drop=True)[["rings"]].copy()
     pdf["_pfid"] = np.arange(len(pdf), dtype=np.int64)
-    if len(pdf) == 0:
-        burned = spark.createDataFrame([], "row long, col long, value double")
-    else:
-        # grid_aligned: burn membership is the REFERENCE-grid center test
-        # (GDAL features.rasterize over the grid-aligned window,
-        # conversion.py:570-833) — the bbox-local extract lattice diverges
-        # whenever a polygon bbox is not grid-aligned
-        samples = sample_polygons(
-            spark,
-            pdf,
-            grid,
-            all_touched=all_touched,
-            id_column="_pfid",
-            grid_aligned=True,
-        )
-        # DROP sample centers outside the grid BEFORE encoding (same
-        # contract as extract_polygons, reference sops.py:836-844):
-        # encode_cells clamps out-of-grid centers onto border cells, so a
-        # polygon arm overhanging the grid would otherwise burn the
-        # border cells it snaps onto — GDAL rasterize leaves those at
-        # fill
-        samples = samples.filter(in_bounds_col(grid))
-        enc = encode_cells(samples, grid).select("_pfid", "row", "col")
-
-        burn = pd.DataFrame({"_pfid": pdf["_pfid"]})
-        burn["burn"] = (
-            polygons.reset_index(drop=True)[col].astype(float)
-            if col
-            else float(default_value)
-        )
-        burn_df = spark.createDataFrame(burn)
-
-        burned = (
-            enc.join(F.broadcast(burn_df), "_pfid")
-            .groupBy("row", "col")
-            .agg(F.max_by("burn", "_pfid").alias("value"))
-        )
+    # grid_aligned: burn membership is the REFERENCE-grid center test (GDAL
+    # features.rasterize over the grid-aligned window, conversion.py:570-833)
+    # — the bbox-local extract lattice diverges whenever a polygon bbox is
+    # not grid-aligned
+    samples, _ = _polygon_samples(
+        pdf, grid, all_touched=all_touched, id_column="_pfid", grid_aligned=True
+    )
+    # DROP sample centers outside the grid BEFORE encoding (same contract
+    # as extract_polygons, reference sops.py:836-844): encoding clamps
+    # out-of-grid centers onto border cells, so a polygon arm overhanging
+    # the grid would otherwise burn the border cells it snaps onto — GDAL
+    # rasterize leaves those at fill
+    samples = samples[in_bounds_mask(samples["x"].values, samples["y"].values, grid)]
+    enc = encode_points_pdf(samples, grid)
+    burn = (
+        polygons[col].astype(float).to_numpy()
+        if col
+        else np.full(len(pdf), float(default_value))
+    )
+    enc["value"] = burn[enc["_pfid"].to_numpy()]
+    # later feature wins on a cell burned by several
+    last = enc.sort_values("_pfid", kind="stable").drop_duplicates(
+        ["row", "col"], keep="last"
+    )
+    burned = spark.createDataFrame(
+        last[["row", "col", "value"]], "row long, col long, value double"
+    )
 
     from .transform import _with_centers
 

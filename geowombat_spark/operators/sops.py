@@ -44,15 +44,20 @@ def pip_flag(polygons: pd.DataFrame, all_touched: bool = False, cellx: float = 0
     ray-cast pandas UDF (the rasterize stand-in,
     ``src/geowombat/core/conversion.py:570-833``).
 
-    The kernel bbox-prefilters candidates in numpy before edge tests, so the
-    UDF stays cheap even when applied to a whole tile. ``all_touched=True``
-    is GDAL's exact any-touch: center-in-polygon OR the polygon boundary
+    The UDF drops the cells outside the polygons' total bounds, then the
+    kernels test each remaining cell only against the rings whose bounding
+    box covers it (``grid.point_in_rings`` / ``grid.rects_touch_rings``
+    prune per ring), so a batch costs about its cells plus the cells ×
+    edges of the few polygons near each cell. ``all_touched=True`` is
+    GDAL's exact any-touch: center-in-polygon OR the polygon boundary
     overlaps the cell rect (separating-axis segment-vs-rect test,
     ``grid.rects_touch_rings`` — a cell intersecting the polygon either
-    contains its center inside or is crossed by the boundary).
+    contains its center inside or is crossed by the boundary); cells
+    already flagged skip the rect test.
     """
     ring_sets = _rings_arrays(polygons)
     minx, miny, maxx, maxy = _total_bounds(polygons)
+    hx, hy = abs(cellx) / 2.0, abs(celly) / 2.0
 
     @F.pandas_udf("boolean")
     def _pip(xs: pd.Series, ys: pd.Series) -> pd.Series:
@@ -72,9 +77,8 @@ def pip_flag(polygons: pd.DataFrame, all_touched: bool = False, cellx: float = 0
             for rings in ring_sets:
                 hit |= point_in_rings(cx, cy, rings)
                 if all_touched:
-                    hit |= rects_touch_rings(
-                        cx, cy, abs(cellx) / 2.0, abs(celly) / 2.0, rings
-                    )
+                    rest = np.flatnonzero(~hit)
+                    hit[rest] = rects_touch_rings(cx[rest], cy[rest], hx, hy, rings)
             out[cand] = hit
         return pd.Series(out)
 

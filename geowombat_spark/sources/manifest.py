@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,6 +51,13 @@ def _bbox_intersects(a, b) -> bool:
     )
 
 
+def _instant(s: str) -> datetime:
+    """An ISO date or datetime string as an aware instant: a 'Z' suffix
+    and a string without an offset both read as UTC."""
+    dt = datetime.fromisoformat(s[:-1] + "+00:00" if s.endswith("Z") else s)
+    return dt if dt.tzinfo is not None else dt.replace(tzinfo=timezone.utc)
+
+
 def search_catalog(
     catalog: dict | str,
     collection: str,
@@ -58,8 +66,9 @@ def search_catalog(
 ) -> list[dict]:
     """``open_stac``'s search step (``stac.py:440-520`` shape): items of
     ``collection`` intersecting ``bounds`` within ``date_range``
-    (inclusive ISO dates), sorted by (datetime, id) — the deterministic
-    stack order."""
+    (inclusive ISO strings: the start compares with its time part, if
+    any, the end on its date), sorted by (datetime, id) — the
+    deterministic stack order."""
     if isinstance(catalog, str):
         catalog = load_catalog(catalog)
     try:
@@ -69,6 +78,9 @@ def search_catalog(
             f"collection {collection!r} not in catalog "
             f"(have {sorted(catalog['collections'])})"
         ) from None
+    if date_range is not None:
+        start, end = date_range
+        start_at = _instant(start) if len(start) > 10 else None
     out = []
     for it in items:
         if bounds is not None and not _bbox_intersects(
@@ -76,10 +88,17 @@ def search_catalog(
         ):
             continue
         if date_range is not None and not (
-            # compare on the DATE part: an item datetime with a time
-            # component ('2020-01-31T10:00:00') must not fall off the
-            # inclusive end date by raw string comparison
-            date_range[0][:10] <= it["datetime"][:10] <= date_range[1][:10]
+            # a start with a time part compares as an instant (a start of
+            # '2020-01-31T12:00' drops items from earlier that day); a
+            # date-only start and the end compare on the DATE part, so an
+            # item datetime with a time component ('2020-01-31T10:00:00')
+            # stays inside an inclusive end date
+            (
+                start <= it["datetime"][:10]
+                if start_at is None
+                else start_at <= _instant(it["datetime"])
+            )
+            and it["datetime"][:10] <= end[:10]
         ):
             continue
         out.append(it)

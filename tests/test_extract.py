@@ -350,3 +350,145 @@ def test_sample_polygons_empty_frame_returns_empty(spark):
     out = sample_polygons(spark, empty, L8_GRID)
     assert out.count() == 0
     assert set(out.columns) == {"fid", "point", "x", "y"}
+
+
+def test_sample_polygons_empty_string_fid_frame_is_string_typed(spark, docs):
+    """An empty polygons frame whose fid column is textual types the id as
+    string, like a non-empty string-fid frame, so the empty and non-empty
+    extracts union by name."""
+    from geowombat_spark.operators.extract import extract_polygons, sample_polygons
+
+    sq = [[717585.0, -2776995.0, 717675.0, -2776995.0, 717675.0, -2777085.0,
+           717585.0, -2777085.0, 717585.0, -2776995.0]]
+    for dtype in (object, "string"):
+        empty = pd.DataFrame({"fid": pd.Series([], dtype=dtype), "rings": []})
+        assert dict(sample_polygons(spark, empty, L8_GRID).dtypes)["fid"] == "string"
+    empty_i = pd.DataFrame({"fid": pd.Series([], dtype="int64"), "rings": []})
+    assert dict(sample_polygons(spark, empty_i, L8_GRID).dtypes)["fid"] == "bigint"
+
+    full = pd.DataFrame({"fid": ["a"], "rings": [sq]})
+    out_full = extract_polygons(spark, docs, full, L8_GRID)
+    out_empty = extract_polygons(spark, docs, full.iloc[:0], L8_GRID)
+    assert dict(out_empty.dtypes)["fid"] == "string"
+    both = out_full.unionByName(out_empty)
+    assert dict(both.dtypes)["fid"] == "string"
+    assert both.count() == out_full.count() == 9
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_polygon_sampling_plans_run_no_python_worker(spark, docs, aoi_polygons_pdf):
+    """extract_polygons and polygon_to_array sample the polygons in the
+    driver: their executed plans hold no grouped-pandas and no Arrow UDF
+    node."""
+    from geowombat_spark.operators.extract import extract_polygons
+    from geowombat_spark.operators.rasterize import polygon_to_array
+
+    plans = [
+        _executed_plan(extract_polygons(spark, docs, aoi_polygons_pdf, L8_GRID)),
+        _executed_plan(
+            extract_polygons(spark, docs, aoi_polygons_pdf, L8_GRID, all_touched=True, frac=0.5)
+        ),
+        _executed_plan(polygon_to_array(spark, aoi_polygons_pdf.iloc[:2], L8_GRID)),
+    ]
+    for plan in plans:
+        assert "BroadcastHashJoin" in plan, plan
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+
+
+def test_sample_polygons_keeps_null_fids_multiparts_and_seeding(spark):
+    """Sampling keeps every feature: null and NaN fids (one feature keyed
+    'None' in a textual column, 'nan' in a float one) and every part of a
+    duplicate-fid multipart feature, with the int-first id typing and the
+    per-feature, per-part frac seeding."""
+    import zlib
+
+    from geowombat_spark.grid import polygon_sample_centers
+    from geowombat_spark.operators.extract import sample_polygons
+
+    def sq(x0, y0, w):
+        return [[x0, y0, x0 + w, y0, x0 + w, y0 - w, x0, y0 - w, x0, y0]]
+
+    rings = [sq(717585.0, -2776995.0, 150.0), sq(717885.0, -2776995.0, 210.0),
+             sq(718185.0, -2776995.0, 120.0)]
+
+    def part_samples(part, fid_seed, ri, frac=0.5, seed=42):
+        cx, cy = polygon_sample_centers(
+            [np.asarray(r) for r in rings[part]], 30.0, 30.0
+        )
+        rng = np.random.default_rng(seed + fid_seed + 7919 * ri)
+        idx = np.sort(rng.choice(cx.shape[0], size=int(cx.shape[0] * frac), replace=False))
+        return list(zip(cx[idx], cy[idx]))
+
+    def got(df, fid):
+        rows = sorted(
+            (r["point"], r["x"], r["y"]) for r in df.collect() if r["fid"] == fid
+        )
+        assert [p for p, _, _ in rows] == list(range(len(rows)))
+        return [(x, y) for _, x, y in rows]
+
+    crc = lambda s: zlib.crc32(s.encode("utf-8"))  # noqa: E731
+    cases = [
+        # fids, id type, {output fid: [(fid_seed, part index), ...]}
+        ([5, 5, 6], "bigint", {5: [(5, 0), (5, 1)], 6: [(6, 2)]}),
+        ([5.0, 5.0, 6.0], "bigint", {5: [(5, 0), (5, 1)], 6: [(6, 2)]}),
+        (["a", None, "a"], "string",
+         {"a": [(crc("a"), 0), (crc("a"), 2)], "None": [(crc("None"), 1)]}),
+        ([7.5, np.nan, np.nan], "string",
+         {"7.5": [(crc("7.5"), 0)], "nan": [(crc("nan"), 1), (crc("nan"), 2)]}),
+    ]
+    for fids, id_type, want in cases:
+        polys = pd.DataFrame({"fid": fids, "rings": rings})
+        out = sample_polygons(spark, polys, L8_GRID, frac=0.5)
+        assert dict(out.dtypes)["fid"] == id_type
+        assert {r["fid"] for r in out.collect()} == set(want)
+        for fid, parts in want.items():
+            # each part is seeded by its position within the feature, and
+            # point ids continue across the parts
+            exp = []
+            for ri, (fid_seed, part) in enumerate(parts):
+                exp += part_samples(part, fid_seed, ri)
+            assert got(out, fid) == exp, (fids, fid)
+
+
+@pytest.mark.parametrize(
+    "n_times, max_samples, one_partition", [(None, None, True), (None, 40, False), (3, None, False)]
+)
+def test_extract_polygons_rows_in_fid_point_order(
+    spark, docs, aoi_polygons_pdf, monkeypatch, n_times, max_samples, one_partition
+):
+    """Rows come back ordered by (fid, point, t). A small extract from an
+    unstacked corpus is sorted in one partition; a larger one, and one
+    from a corpus with a 't' column (its row count is samples x time
+    steps), is orderBy's global sort over the shuffle partitions."""
+    from pyspark.sql import functions as F
+
+    from geowombat_spark.operators import extract as ex
+
+    if max_samples is not None:
+        monkeypatch.setattr(ex, "SORT_ONE_PARTITION_MAX_SAMPLES", max_samples)
+    corpus = docs.drop("t")
+    if n_times is not None:
+        t_type = dict(docs.dtypes)["t"]
+        times = spark.range(n_times).select(F.col("id").cast(t_type).alias("t"))
+        corpus = corpus.crossJoin(times)
+    out = ex.extract_polygons(spark, corpus, aoi_polygons_pdf, L8_GRID, all_touched=True)
+    sort = out._jdf.queryExecution().optimizedPlan().toString().splitlines()[0]
+    exchange = _executed_plan(out)
+    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if one_partition:
+        assert sort.startswith("Sort [") and sort.endswith(", false"), sort
+        assert "Exchange SinglePartition" in exchange, exchange
+    else:
+        assert sort.startswith("Sort [") and sort.endswith(", true"), sort
+        assert "rangepartitioning(" in exchange and f", {shuffle_parts})" in exchange, exchange
+    cols = ["fid", "point"] + (["t"] if n_times else [])
+    keys = [tuple(r[c] for c in cols) for r in out.collect()]
+    assert len(keys) > 100 * (n_times or 1)
+    assert keys == sorted(keys)
+    if n_times:
+        assert len({k[2] for k in keys}) == n_times

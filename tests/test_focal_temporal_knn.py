@@ -412,3 +412,20 @@ def test_window_weights_w1_is_identity():
 
     w = window_weights(1)
     assert w.shape == (1, 1) and w[0, 0] == 1.0
+
+
+@pytest.mark.parametrize("stat", ["mean", "min", "max", "var", "std", "perc", "sum"])
+def test_window_stat_all_nan_window_is_silent_nan(stat):
+    """An all-NaN window (nodata, or off the image) gives NaN, which the
+    caller refills with nodata, without a RuntimeWarning per window."""
+    import warnings
+
+    from geowombat_spark.operators.focal import _window_stat
+
+    win = np.full((2, 3, 3, 3), np.nan)
+    win[0, 0] = 4.0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = _window_stat(stat, 50)(win)
+    assert np.isnan(out[1]).all() and np.isnan(out[0, 1:]).all()
+    assert np.isfinite(out[0, 0])

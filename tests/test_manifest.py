@@ -125,3 +125,63 @@ def test_search_boundary_contact_and_datetime_items(catalog_dir):
     }
     got2 = search_catalog(cat2, "c", date_range=("2024-01-01", "2024-01-31"))
     assert [it["id"] for it in got2] == ["x"]
+
+
+def _dated_catalog(*datetimes):
+    return {
+        "collections": {
+            "c": {
+                "items": [
+                    {
+                        "id": dt,
+                        "datetime": dt,
+                        "bbox": [0.0, -480.0, 480.0, 0.0],
+                        "href": "unused",
+                    }
+                    for dt in datetimes
+                ]
+            }
+        }
+    }
+
+
+def test_search_date_range_start_keeps_its_time():
+    """A start with a time component drops items from earlier that day."""
+    cat = _dated_catalog(
+        "2020-01-30T23:00:00", "2020-01-31T10:00:00", "2020-01-31T12:00:00",
+        "2020-01-31T14:00:00",
+    )
+    got = search_catalog(cat, "c", date_range=("2020-01-31T12:00", "2020-02-28"))
+    assert [it["id"] for it in got] == ["2020-01-31T12:00:00", "2020-01-31T14:00:00"]
+    got = search_catalog(cat, "c", date_range=("2020-01-31", "2020-02-28"))
+    assert [it["id"] for it in got] == [
+        "2020-01-31T10:00:00", "2020-01-31T12:00:00", "2020-01-31T14:00:00",
+    ]
+    # a space separator still drops the earlier items of that day
+    got = search_catalog(cat, "c", date_range=("2020-01-31 12:00", "2020-02-28"))
+    assert [it["id"] for it in got] == ["2020-01-31T12:00:00", "2020-01-31T14:00:00"]
+
+
+def test_search_date_range_start_compares_instants_across_formats():
+    """A timed start is compared as an instant, not as a string: 'Z' and
+    '+00:00' name the same instant whatever the precision."""
+    cat = _dated_catalog(
+        "2020-01-31T11:59:59Z", "2020-01-31T12:00:00Z", "2020-01-31T12:00:01+00:00",
+    )
+    for start in ("2020-01-31T12:00Z", "2020-01-31T12:00:00+00:00", "2020-01-31 12:00"):
+        got = search_catalog(cat, "c", date_range=(start, "2020-02-28"))
+        assert [it["id"] for it in got] == [
+            "2020-01-31T12:00:00Z", "2020-01-31T12:00:01+00:00",
+        ], start
+
+
+def test_search_date_range_end_compares_on_the_date():
+    """The end is inclusive of its whole day, whatever its time part."""
+    cat = _dated_catalog(
+        "2020-01-31T10:00:00", "2020-01-31T23:59:59", "2020-02-01T00:00:00"
+    )
+    for end in ("2020-01-31", "2020-01-31T08:00"):
+        got = search_catalog(cat, "c", date_range=("2020-01-01", end))
+        assert [it["id"] for it in got] == [
+            "2020-01-31T10:00:00", "2020-01-31T23:59:59",
+        ]

@@ -4,6 +4,8 @@ property-based testing exists upstream; these pin the algebraic invariants
 the golden values sample)."""
 
 import numpy as np
+import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -675,3 +677,208 @@ def test_segment_supercover_exact_corner_crossing_is_conservative():
     assert (2, 2) in got            # is clamped by callers when off-window)
     assert {(0, 1), (1, 0)} <= got  # corner grazes at (1,1)
     assert {(1, 2), (2, 1)} <= got  # corner grazes at (2,2)
+
+
+# ---------------------------------------------------------------------------
+# Bbox-pruned ring kernels vs the unpruned N x E broadcast
+# ---------------------------------------------------------------------------
+
+
+def _closed(ring):
+    r = np.asarray(ring, dtype=np.float64)
+    xs, ys = r[0::2], r[1::2]
+    if xs.shape[0] and (xs[0] != xs[-1] or ys[0] != ys[-1]):
+        xs, ys = np.append(xs, xs[0]), np.append(ys, ys[0])
+    return xs, ys
+
+
+def _pip_unpruned(px, py, rings):
+    """Every point against every edge, no bounding box and no blocks."""
+    inside = np.zeros(px.shape[0], dtype=bool)
+    for ring in rings:
+        xs, ys = _closed(ring)
+        if xs.shape[0] == 0:
+            continue
+        x1, y1, x2, y2 = xs[:-1], ys[:-1], xs[1:], ys[1:]
+        pyc, pxc = py[:, None], px[:, None]
+        straddle = (y1[None, :] > pyc) != (y2[None, :] > pyc)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (x2 - x1)[None, :] * (pyc - y1[None, :]) / (y2 - y1)[
+                None, :
+            ] + x1[None, :]
+        inside ^= ((straddle & (pxc < xint)).sum(axis=1) % 2).astype(bool)
+    return inside
+
+
+def _touch_unpruned(cx, cy, hx, hy, rings):
+    cx, cy = cx[:, None], cy[:, None]
+    out = np.zeros(cx.shape[0], dtype=bool)
+    for ring in rings:
+        xs, ys = _closed(ring)
+        if xs.shape[0] < 2:
+            continue
+        x1, y1, x2, y2 = xs[:-1][None], ys[:-1][None], xs[1:][None], ys[1:][None]
+        ox = (np.minimum(x1, x2) <= cx + hx) & (np.maximum(x1, x2) >= cx - hx)
+        oy = (np.minimum(y1, y2) <= cy + hy) & (np.maximum(y1, y2) >= cy - hy)
+        nx, ny = -(y2 - y1), x2 - x1
+        straddle = np.abs(nx * (cx - x1) + ny * (cy - y1)) <= (
+            hx * np.abs(nx) + hy * np.abs(ny)
+        )
+        out |= (ox & oy & straddle).any(axis=1)
+    return out
+
+
+def _random_polygon(rng, cx, cy, radius, with_hole):
+    """A star-shaped exterior (closed or not) plus an optional hole."""
+    n = int(rng.integers(3, 40))
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = radius * rng.uniform(0.4, 1.0, n)
+    ext = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+    if rng.random() < 0.5:
+        ext = np.vstack([ext, ext[:1]])
+    rings = [ext.ravel()]
+    if with_hole:
+        hole = np.column_stack(
+            [cx + 0.3 * radius * np.cos(ang[::-1]), cy + 0.3 * radius * np.sin(ang[::-1])]
+        )
+        rings.append(hole.ravel())
+    return rings
+
+
+def _edge_probes(rng, rings):
+    """Points on every ring's bounding-box edges and one ulp either side,
+    and on every vertex and up to two ulps around it in x and y."""
+    px, py = [], []
+    for ring in rings:
+        xs, ys = _closed(ring)
+        for v in (xs.min(), xs.max()):
+            for x in (np.nextafter(v, -np.inf), v, np.nextafter(v, np.inf)):
+                px.append(np.full(64, x))
+                py.append(np.concatenate([rng.uniform(ys.min(), ys.max(), 60), ys[:4]]))
+        for v in (ys.min(), ys.max()):
+            for y in (np.nextafter(v, -np.inf), v, np.nextafter(v, np.inf)):
+                py.append(np.full(64, y))
+                px.append(np.concatenate([rng.uniform(xs.min(), xs.max(), 60), xs[:4]]))
+        near_x = [xs, np.nextafter(xs, -np.inf), np.nextafter(xs, np.inf)]
+        near_x += [np.nextafter(near_x[1], -np.inf), np.nextafter(near_x[2], np.inf)]
+        near_y = [ys, np.nextafter(ys, -np.inf), np.nextafter(ys, np.inf)]
+        near_y += [np.nextafter(near_y[1], -np.inf), np.nextafter(near_y[2], np.inf)]
+        for x in near_x:
+            for y in near_y:
+                px.append(x)
+                py.append(y)
+    return np.concatenate(px), np.concatenate(py)
+
+
+@given(st.integers(0, 2**32 - 1))
+@settings(max_examples=25, deadline=None)
+def test_pruned_ring_kernels_bit_identical_to_unpruned(seed):
+    """The per-ring bounding-box prune and the blocked broadcast change no
+    bit of ``point_in_rings`` or ``rects_touch_rings``: probes on and
+    around every box edge and vertex, rings reaching past the grid, rings
+    snapped to cell edges (cell rects that touch a box edge exactly), and
+    more candidates than one block."""
+    from geowombat_spark.grid import RING_BLOCK, rects_touch_rings
+
+    rng = np.random.default_rng(seed)
+    n = 96  # 9,216 cell centers: more than two blocks of candidates
+    assert n * n > 2 * RING_BLOCK
+    rr, cc = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+    gx, gy = rowcol_to_center_coords(GRID, rr.ravel(), cc.ravel())
+    extent = n * GRID.cellx
+    hx, hy = GRID.cellx / 2, GRID.celly / 2
+    for _ in range(4):
+        # centers anywhere over the lattice and up to a radius past it, so
+        # some rings reach past the grid
+        radius = extent * rng.uniform(0.05, 0.8)
+        cx = GRID.left + rng.uniform(-0.3, 1.3) * extent
+        cy = GRID.top - rng.uniform(-0.3, 1.3) * extent
+        rings = _random_polygon(rng, cx, cy, radius, with_hole=rng.random() < 0.5)
+        if rng.random() < 0.5:
+            rings = [
+                np.column_stack(
+                    [
+                        GRID.left + np.round((r[0::2] - GRID.left) / GRID.cellx) * GRID.cellx,
+                        GRID.top - np.round((GRID.top - r[1::2]) / GRID.celly) * GRID.celly,
+                    ]
+                ).ravel()
+                for r in rings
+            ]
+        ex, ey = _edge_probes(rng, rings)
+        px, py = np.concatenate([gx, ex]), np.concatenate([gy, ey])
+        np.testing.assert_array_equal(
+            point_in_rings(px, py, rings), _pip_unpruned(px, py, rings)
+        )
+        np.testing.assert_array_equal(
+            rects_touch_rings(px, py, hx, hy, rings),
+            _touch_unpruned(px, py, hx, hy, rings),
+        )
+
+
+def test_point_in_rings_prune_keeps_rounded_intersections():
+    """Near the origin, where a ring's extent is comparable to its
+    coordinates, a computed edge intersection can land an ulp or two
+    outside the ring's x range, and a point there still flips parity: the
+    prune pads the x bounds so that such points keep their result."""
+    rng = np.random.default_rng(11)
+    flips_outside = 0
+    for _ in range(400):
+        rings = _random_polygon(
+            rng, *rng.uniform(-1, 1, 2), rng.uniform(0.5, 3), with_hole=False
+        )
+        px, py = _edge_probes(rng, rings)
+        want = _pip_unpruned(px, py, rings)
+        xs, _ = _closed(rings[0])
+        flips_outside += int((want & ((px < xs.min()) | (px > xs.max()))).sum())
+        np.testing.assert_array_equal(point_in_rings(px, py, rings), want)
+    assert flips_outside > 0  # the rounding case occurred
+
+
+@pytest.mark.parametrize("all_touched", [True, False])
+@pytest.mark.parametrize("keep", ["in", "out"])
+def test_mask_matches_bruteforce_over_every_polygon(spark, all_touched, keep):
+    """``sops.mask`` with 24 small scattered polygons (some with holes, some
+    reaching past the grid) keeps exactly the cells a brute-force test of
+    every cell against every polygon flags."""
+    from geowombat_spark.operators.sops import mask
+
+    grid = GridSpec(
+        left=0.0, top=1920.0, cellx=30.0, celly=30.0,
+        nrows=64, ncols=64, tile_rows=32, tile_cols=32, nodata=0.0,
+    )
+    rng = np.random.default_rng(7)
+    polys = [
+        _random_polygon(
+            rng,
+            grid.left + rng.uniform(-0.05, 1.05) * 64 * grid.cellx,
+            grid.top - rng.uniform(-0.05, 1.05) * 64 * grid.celly,
+            grid.cellx * rng.uniform(1.0, 5.0),
+            with_hole=i % 3 == 0,
+        )
+        for i in range(24)
+    ]
+    rr, cc = np.meshgrid(np.arange(64), np.arange(64), indexing="ij")
+    rr, cc = rr.ravel(), cc.ravel()
+    x, y = rowcol_to_center_coords(grid, rr, cc)
+    docs = spark.createDataFrame(
+        pd.DataFrame({"row": rr, "col": cc, "x": x, "y": y, "band_blue": 1.0 + rr})
+    )
+    want = np.zeros(rr.shape[0], dtype=bool)
+    for rings in polys:
+        want |= _pip_unpruned(x, y, rings)
+        if all_touched:
+            want |= _touch_unpruned(x, y, grid.cellx / 2, grid.celly / 2, rings)
+    assert 0 < want.sum() < want.shape[0]
+    if keep == "out":
+        want = ~want
+    pdf = pd.DataFrame({"fid": np.arange(len(polys)), "rings": [[list(r) for r in p] for p in polys]})
+    out = (
+        mask(docs, pdf, grid, keep=keep, bands=("band_blue",), all_touched=all_touched)
+        .filter("band_blue IS NOT NULL")
+        .select("row", "col")
+        .toPandas()
+    )
+    got = np.zeros(rr.shape[0], dtype=bool)
+    got[out["row"].to_numpy() * 64 + out["col"].to_numpy()] = True
+    assert len(out) == got.sum()
+    np.testing.assert_array_equal(got, want)
